@@ -991,15 +991,9 @@ object EmbeddingStore {
     * BEFORE the ranking (like every ranked score in the library) so
     * the choice is deterministic across engines and the oracle can
     * replay it. The returned ids are index METADATA (a handful of
-    * ints), bounded-collected. */
-  private[graft] def probeCells(spark: SparkSession, path: String,
-      queryDocId: Long, probes: Int): Array[Int] =
-    probeCellsWithQuery(spark, path, queryDocId, probes)._1
-
-  /** [[probeCells]] plus the query's stored vector, from the SAME
-    * bounded metadata job (the vector rides the collected probe rows
-    * instead of costing a second scan) — the compressed probe needs
-    * both. */
+    * ints), bounded-collected; the query's stored vector rides the
+    * same collected rows (None for an absent query), so every probe
+    * scores against it without a second lookup. */
   private[graft] def probeCellsWithQuery(spark: SparkSession, path: String,
       queryDocId: Long, probes: Int): (Array[Int], Option[Seq[Float]]) = {
     val centroids = IndexCatalog.read(spark, path, "centroids")
@@ -1028,11 +1022,13 @@ object EmbeddingStore {
     * exclusion, rounding and probe handling can never diverge. */
   private def scoredProbeScan(spark: SparkSession, path: String,
       queryDocId: Long, probes: Int): DataFrame = {
-    val qv = IndexCatalog.readPruned(spark, path, "cells",
-        "doc_id", Seq(queryDocId))
-      .filter(col("doc_id") === queryDocId)
-      .select(col("embedding").as("qv"))
-    val probedCells = probeCells(spark, path, queryDocId, probes)
+    // the scan scores against the query vector the probe already
+    // collected, as ONE literal (no second lookup, no broadcast). An
+    // absent query probes no cell, so the pruned read below is the
+    // empty frame and the literal is never evaluated.
+    val (probedCells, qFloat) =
+      probeCellsWithQuery(spark, path, queryDocId, probes)
+    val qv = typedLit(qFloat.getOrElse(Seq.empty[Float]))
     // the probed scan reads ONLY files whose cell range intersects a
     // probed cell (manifest stats pruning — the versioned-table
     // analogue of the old Hive PartitionFilters); the isin filter is
@@ -1041,9 +1037,8 @@ object EmbeddingStore {
         probedCells.toSeq)
       .filter(col("cell").isin(probedCells.toSeq: _*))
       .filter(col("doc_id") =!= queryDocId)
-      .join(broadcast(qv))
       .select(col("doc_id"), col("cell"),
-        round(cosineSim(col("embedding"), col("qv")), 6).as("score"))
+        round(cosineSim(col("embedding"), qv), 6).as("score"))
   }
 
   def searchIvf(spark: SparkSession, path: String, queryDocId: Long,
@@ -1136,9 +1131,9 @@ object EmbeddingStore {
     * Plan: (1) ONE metadata job scores the centroid table against
     * the broadcast query set and keeps the top `probes` cells per
     * query (6dp-rounded cosine, cell tie-break — the
-    * [[probeCells]] rule per query); (2) the ≤ N·probes DISTINCT
-    * probed cell ids — index metadata, bounded-collected like every
-    * IVF-path collect — become partition-pruning literals, so the
+    * [[probeCellsWithQuery]] rule per query); (2) the ≤ N·probes
+    * DISTINCT probed cell ids — index metadata, bounded-collected like
+    * every IVF-path collect — become partition-pruning literals, so the
     * cells store is listed and scanned ONCE for the union of all
     * queries' probes; (3) each scanned row scores only against the
     * queries that probed its cell (broadcast equi-join on cell —
@@ -1156,8 +1151,8 @@ object EmbeddingStore {
   /** The per-query probe choice for a BATCH of queries, in ONE pass:
     * every centroid × every broadcast query (metadata-scale: k cells
     * × N queries), top `probes` cells per query by 6dp-rounded
-    * cosine with the cell tie-break — the [[probeCells]] rule per
-    * query. Returns the eagerly-pinned (query_id, cell, qv) probe
+    * cosine with the cell tie-break — the [[probeCellsWithQuery]]
+    * rule per query. Returns the eagerly-pinned (query_id, cell, qv) probe
     * map (it feeds a metadata collect AND a candidate join in every
     * consumer) — shared by the exact ([[searchIvfBatch]]) and
     * compressed ([[ProductQuantizer.searchIvfPqBatch]]) batch probes
@@ -1186,7 +1181,11 @@ object EmbeddingStore {
   def searchIvfBatch(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, probes: Int = 2): DataFrame = {
     val probeMap = batchProbeMap(spark, path, queries, probes)
-    val probedCells = probedCellsOf(probeMap, queries.count() * probes)
+    // distinct probed cells can never outnumber the centroids: the
+    // centroid manifest's row total bounds the collect without
+    // counting (and so re-running) the query frame
+    val probedCells = probedCellsOf(probeMap,
+      IndexCatalog.rowCount(spark, path, "centroids"))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
     IndexCatalog.readPruned(spark, path, "cells", "cell",

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions.cosineSim
-import graft.sources.Tables
+import graft.sources.{TableFormat, Tables}
 
 /** Product-quantization (PQ) layer over the persisted IVF index — the
   * scan-bytes lever for vector search at 100 TB (reference: the
@@ -228,29 +228,28 @@ object ProductQuantizer {
       .select(col("doc_id"), col("cell"), codesExpr(cb, m).as("codes"))
 
   /** The persisted codebook table back as driver-side metadata
-    * (m·ncent rows, bounded), memoized per (path, dir-mtime):
-    * codebooks are immutable between builds (appends never touch
-    * them; a rebuild swaps the directory and bumps its mtime, which
-    * invalidates the entry), so repeated probes against one index pay
-    * the read job once. */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long),
-      Seq[(Int, Int, Seq[Long])]]()
+    * (m·ncent rows, bounded), memoized per codebook generation's
+    * MANIFEST identity ([[TableFormat.manifestIdentity]]): codebooks
+    * are immutable within a generation (appends never touch them), a
+    * rebuild commits a new manifest, and so does an index deleted and
+    * rebuilt at the same path — each rotates the key, so repeated
+    * probes against one index pay the read job once and a rebuilt
+    * index is never served its predecessor's codebooks. Entry-bounded
+    * like the manifest cache. */
+  private[graft] val codebookCache = new TableFormat.BoundedLru[
+    (String, Seq[(String, Long, Long)]), Seq[(Int, Int, Seq[Long])]](64)
 
   private def readCodebooks(spark: SparkSession,
       path: String): Seq[(Int, Int, Seq[Long])] = {
-    // keyed by the SUBSTORE generation: codebooks are immutable
-    // within a generation (appends never touch them; a rebuild
-    // commits the next generation, which rotates the key), so
-    // repeated probes against one index pay the read job once
     val root = s"$path/pq_codebooks"
-    val key = (root, graft.sources.TableFormat.currentGen(root))
-    codebookCache.computeIfAbsent(key, _ =>
-      EmbeddingStore.collectBounded(
-        graft.sources.TableFormat.readViaManifest(spark, root, key._2,
-          graft.sources.TableFormat.genSchema(root, key._2)),
+    val gen = TableFormat.currentGen(root)
+    def load() = EmbeddingStore.collectBounded(
+        TableFormat.readViaManifest(spark, root, gen,
+          TableFormat.genSchema(root, gen)),
         numCentroids * 64L, "PQ codebooks")
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq)
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
+    TableFormat.manifestIdentity(root, gen)
+      .fold(load())(codebookCache.getOrElseUpdate(_)(load()))
   }
 
   /** `q_search_ivfpq` — compressed-domain ANN through the persisted

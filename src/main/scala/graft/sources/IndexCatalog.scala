@@ -31,8 +31,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Single-writer by contract, like every maintenance verb here (the
   * daily loop owns its index); the marker install is still the CAS
   * link, so an accidental second writer fails loudly rather than
-  * silently last-wins. Scale shape: the pointer is one tiny file;
-  * resolution is one read; nothing here grows with the corpus.
+  * silently last-wins. Scale shape: the pointer is one tiny file,
+  * resolved by one small-file read. Each pinned substore generation's
+  * manifest is read by Spark once, then served from the driver's
+  * manifest cache ([[TableFormat.readManifest]]), so a warm probe
+  * plans its scans without a Spark job. Nothing here grows with the
+  * corpus.
   */
 object IndexCatalog {
 
@@ -114,13 +118,23 @@ object IndexCatalog {
     * their residual filters (the scan is a superset by stats). */
   private[graft] def readPruned(spark: SparkSession, path: String,
       store: String, key: String, values: Seq[Any]): DataFrame = {
-    val sg = pins(path, currentGen(path)).getOrElse(store,
-      throw new java.io.FileNotFoundException(
-        s"index at $path does not pin substore $store"))
+    val sg = currentPin(path, store)
     val root = s"$path/$store"
     TableFormat.readPrunedIn(spark, root, sg,
       TableFormat.genSchema(root, sg), key, values)
   }
+
+  /** Total rows of `store` at the current index generation, summed
+    * from its manifest's per-file counts — no data file is read. */
+  private[graft] def rowCount(spark: SparkSession, path: String,
+      store: String): Long =
+    TableFormat.manifestRowCount(spark, s"$path/$store",
+      currentPin(path, store))
+
+  private def currentPin(path: String, store: String): Long =
+    pins(path, currentGen(path)).getOrElse(store,
+      throw new java.io.FileNotFoundException(
+        s"index at $path does not pin substore $store"))
 
   /** Retention over the whole index: keep the newest `keep` index
     * generations; every substore vacuums by REACHABILITY down to the

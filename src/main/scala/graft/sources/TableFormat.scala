@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
@@ -429,19 +431,90 @@ object TableFormat {
       gen: Long, key: String): Unit =
     commitGenManifested(df, root, gen, Seq(key))
 
+  /** A driver-side map that keeps its `maxEntries` most recently used
+    * entries. The value is computed outside the lock, so a slow miss
+    * (a Spark job) never blocks readers of other keys; two racing
+    * misses on one key both compute and the second put wins, which is
+    * harmless for the immutable values cached here. */
+  private[graft] final class BoundedLru[K, V](maxEntries: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > maxEntries
+    }
+    def getOrElseUpdate(k: K)(v: => V): V =
+      Option(m.synchronized(m.get(k))).getOrElse {
+        val fresh = v
+        m.synchronized(m.put(k, fresh))
+        fresh
+      }
+    def clear(): Unit = m.synchronized(m.clear())
+  }
+
+  /** The identity of a committed manifest's BYTES: its dir plus each
+    * part file's (name, length, mtime). Spark names part files after
+    * the writing job's UUID, so a re-commit of the same generation id
+    * (the single-writer overwrite) or a table deleted and recreated at
+    * the same root yields a new identity — never `(root, gen)`, which
+    * both of those reuse. None when the dir holds no part file (a
+    * vacuumed or missing manifest), which the caller sends down the
+    * uncached read so it fails exactly as before. */
+  private[graft] def manifestIdentity(root: String,
+      gen: Long): Option[(String, Seq[(String, Long, Long)])] = {
+    val dir = new java.io.File(manifestPath(root, gen))
+    Option(dir.listFiles()).map(_.toSeq
+        .filter(f => f.isFile && f.getName.startsWith("part-"))
+        .map(f => (f.getName, f.length(), f.lastModified())).sorted)
+      .filter(_.nonEmpty).map(dir.getPath -> _)
+  }
+
+  /** Collected manifests (schema + rows), keyed by
+    * [[manifestIdentity]]. A committed manifest is immutable, so an
+    * entry can never go stale — it can only stop being reachable. The
+    * bound is in entries: a manifest is O(files) rows, and the probe
+    * path touches a handful per index generation. */
+  private[graft] val manifestCache =
+    new BoundedLru[(String, Seq[(String, Long, Long)]),
+      (StructType, Seq[org.apache.spark.sql.Row])](256)
+
+  /** Generation `gen`'s manifest rows and inferred schema, served
+    * from the driver cache when its bytes were read before. A miss is
+    * the plain parquet read (schema inference plus one collect). */
+  private[graft] def manifestRows(spark: SparkSession, root: String,
+      gen: Long): (StructType, Seq[org.apache.spark.sql.Row]) = {
+    def load() = {
+      val df = spark.read.parquet(manifestPath(root, gen))
+      (df.schema, df.collect().toSeq)
+    }
+    manifestIdentity(root, gen).fold(load())(
+      manifestCache.getOrElseUpdate(_)(load()))
+  }
+
   /** A manifest is scan-planning-sized (one row per file), so the
     * schema-inference footer read costs nothing; inferring keeps the
     * min/max columns in their NATIVE types (a string key's range
-    * prunes as strings, a long key's as longs). */
+    * prunes as strings, a long key's as longs). The frame is a
+    * `LocalRelation` over the driver-cached rows: Spark folds a
+    * filter/select/collect over it on the driver (Bloom probes
+    * included), so a warm manifest read runs no Spark job. */
   private[graft] def readManifest(spark: SparkSession, root: String,
-      gen: Long): DataFrame =
-    spark.read.parquet(manifestPath(root, gen))
+      gen: Long): DataFrame = {
+    val (schema, rows) = manifestRows(spark, root, gen)
+    spark.createDataFrame(rows.asJava, schema)
+  }
 
-  /** Read a manifested generation via its file list. The collect is
-    * the driver's scan-planning cost — O(files), the same listing
+  /** The total row count a manifested generation holds — the sum of
+    * its per-file `n_rows`, answered from the manifest alone. */
+  private[graft] def manifestRowCount(spark: SparkSession, root: String,
+      gen: Long): Long =
+    manifestRows(spark, root, gen)._2
+      .map(r => r.getLong(r.fieldIndex("n_rows"))).sum
+
+  /** Read a manifested generation via its file list. Listing the
+    * files is driver-side scan planning — O(files), the same listing
     * Spark's own file index materializes; a format's log IS this
-    * list. An all-rows-deleted generation (empty manifest) reads as
-    * an empty frame. */
+    * list — and a job only when the manifest is not yet cached. An
+    * all-rows-deleted generation (empty manifest) reads as an empty
+    * frame. */
   private[graft] def readViaManifest(spark: SparkSession, root: String,
       gen: Long, schema: StructType): DataFrame = {
     val files = readManifest(spark, root, gen)
@@ -497,7 +570,8 @@ object TableFormat {
       txn: Option[(String, Long)] = None): Option[SkipReport] = {
     // cheap staleness pre-check (the marker CAS below is the gate)
     if (currentGen(root) != expected) return None
-    val m = readManifest(spark, root, expected).localCheckpoint(true)
+    val (mSchema, mRows) = manifestRows(spark, root, expected)
+    val m = spark.createDataFrame(mRows.asJava, mSchema)
     val sc = broadcast(scope)
     // SKETCH REFINEMENT of the skip decision: when the manifest
     // carries a Bloom sketch for the scoped key AND the scope is
@@ -532,8 +606,8 @@ object TableFormat {
       }
     // the split is exhaustive and disjoint (carried = everything not
     // touched, including sketch-rejected range hits), so the carried
-    // count is arithmetic over the pinned manifest — no count job
-    val nAll = m.count()
+    // count is arithmetic over the driver-local manifest — no count job
+    val nAll = mRows.length.toLong
     val rangeTouched = m.join(sc, touch, "left_semi")
     val touchedFiles = refined.fold(rangeTouched)(rangeTouched.filter)
       .select(col("file")).collect().map(_.getString(0)).toSeq
@@ -804,11 +878,14 @@ object TableFormat {
       delta: DataFrame, schema: StructType,
       txn: Option[(String, Long)] = None): SkipReport = {
     val expected = currentGen(root)
-    val m = readManifest(spark, root, expected).localCheckpoint(true)
+    // the manifest is driver-local rows already: no pin, and the
+    // carried count is their length — no job before the delta write
+    val (mSchema, mRows) = manifestRows(spark, root, expected)
+    val m = spark.createDataFrame(mRows.asJava, mSchema)
     tryCommitFiles(spark, root, expected, schema, manifestKeys(m),
       Seq.empty, m, _ => delta.select(
         schema.fieldNames.map(col).toIndexedSeq: _*), txn,
-      carriedN = m.count())
+      carriedN = mRows.length.toLong)
       .getOrElse(throw new IllegalStateException(
         s"appendScoped raced a concurrent writer on $root"))
   }
@@ -851,10 +928,9 @@ object TableFormat {
       lit(v).between(col(s"min_$key"), col(s"max_$key"))).reduce(_ || _)
     val m = readManifest(spark, root, gen)
     // the sketch probe runs INSIDE the manifest filter (the per-row
-    // BloomMightContainAnyExpr), so the driver collects only the
-    // SURVIVING file names — never the sketch bytes of every
-    // range-admitted row, which on a non-clustering key means every
-    // row and would grow the collect with the table's file count
+    // BloomMightContainAnyExpr): over the driver-cached manifest Spark
+    // folds the whole filter into a local scan, so planning a warm
+    // generation's files runs no job at all
     val ranged =
       if (!m.columns.contains(s"bloom_$key")) m.filter(keep)
       else m.filter(keep && (col(s"bloom_$key").isNull ||
@@ -1524,11 +1600,11 @@ object TableFormat {
       schema: StructType, smallRows: Long,
       targetRows: Long): SkipReport = {
     val cur = currentGen(root)
-    val m = readManifest(spark, root, cur).localCheckpoint(true)
+    val m = readManifest(spark, root, cur)
     val keys = manifestKeys(m)
     // ONE collect of (file, n_rows) decides everything driver-side:
     // the fold set, the bin count and the carried count (the old
-    // shape ran a collect plus a sum aggregate over the same pinned
+    // shape ran a collect plus a sum aggregate over the same
     // manifest). Scan-planning-sized by the manifest's contract.
     val sizes = m.select(col("file"), col("n_rows")).collect()
       .map(r => (r.getString(0), r.getLong(1)))

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.operators.EmbeddingStore
+import graft.operators.{EmbeddingStore, ProductQuantizer}
 import graft.sources.{IndexCatalog, TableFormat, Tables}
 
 class IvfIndexSpec extends SparkTestBase {
@@ -439,7 +439,8 @@ class IvfIndexSpec extends SparkTestBase {
     // plan: the cell scan is file-pruned from the manifest AND the
     // label predicate reaches the metadata parquet scan
     locally {
-      val probedF = EmbeddingStore.probeCells(spark, path, 0L, probes = 4)
+      val probedF =
+        EmbeddingStore.probeCellsWithQuery(spark, path, 0L, probes = 4)._1
       val (readF, totalF) = prunedVsTotal(path, "cells", probedF.toSeq)
       assert(readF < totalF,
         s"filtered probe scan planned $readF of $totalF cell files")
@@ -450,7 +451,8 @@ class IvfIndexSpec extends SparkTestBase {
     // completeness within the probed cells: independent brute-force
     // over those cells restricted to label 3 agrees row-for-row
     val cells = IndexCatalog.read(spark, path, "cells")
-    val probed = EmbeddingStore.probeCells(spark, path, 0L, probes = 4).toSeq
+    val probed = EmbeddingStore.probeCellsWithQuery(spark, path, 0L,
+      probes = 4)._1.toSeq
     val labels = t.embeddings
       .filter(col("label") === 3).select(col("vec_id")).collect()
       .map(_.getLong(0)).toSet
@@ -463,5 +465,63 @@ class IvfIndexSpec extends SparkTestBase {
       .filter(p => labels(p._1))
       .sortBy(p => (-p._2, p._1)).take(10).toSeq
     assert(rows.map(r => (r.getLong(0), r.getDouble(3))).toSeq === exact)
+  }
+
+  test("driver-cached manifests: searchIvf, searchIvfFiltered, " +
+    "searchIvfRadius and searchIvfPq return identical rows from a cold " +
+    "and a warm cache, before and after an appendToIvfIndex") {
+    val t = Tables(spark, sfDir)
+    val vecs = t.embeddings
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val maxId = vecs.agg(max(col("doc_id"))).first().getLong(0)
+    val path = Files.createTempDirectory("graft-ivf-cache").toString
+    EmbeddingStore.buildIvfIndex(spark,
+      vecs.filter(col("doc_id") <= maxId / 2), path)
+    def searches(q: Long): Seq[Seq[Seq[Any]]] = Seq(
+      EmbeddingStore.searchIvf(spark, path, q, k = 10),
+      EmbeddingStore.searchIvfFiltered(spark, path, t.embeddings, q,
+        k = 10, probes = 4, label = 3),
+      EmbeddingStore.searchIvfRadius(spark, path, q, minScore = 0.12,
+        probes = 4),
+      ProductQuantizer.searchIvfPq(spark, path, q, k = 10)
+    ).map(_.collect().map(_.toSeq).toSeq)
+    def cold(q: Long) = {
+      TableFormat.manifestCache.clear()
+      ProductQuantizer.codebookCache.clear()
+      searches(q)
+    }
+    val before = cold(0L)
+    assert(before.forall(_.nonEmpty), "fixture rot: a search came back empty")
+    assert(searches(0L) === before, "warm cache diverged from cold")
+    // the append commits new cells / code generations; a warm cache
+    // still holding the old ones must not serve them
+    EmbeddingStore.appendToIvfIndex(spark, path,
+      vecs.filter(col("doc_id") > maxId / 2))
+    val warmOld = searches(0L)
+    val warmNew = searches(maxId)
+    assert(warmNew.head.nonEmpty, "an appended query id was not found")
+    assert(warmOld === cold(0L), "post-append warm read served stale rows")
+    assert(warmNew === cold(maxId), "post-append warm read served stale rows")
+  }
+
+  test("an absent query id yields an empty frame with the search's schema") {
+    val t = Tables(spark, sfDir)
+    val path = EmbeddingStore.ensureIndex(t)
+    val absent = 987654321L
+    val searches: Seq[Long => org.apache.spark.sql.DataFrame] = Seq(
+      q => EmbeddingStore.searchIvf(spark, path, q, k = 10),
+      q => EmbeddingStore.searchIvfFiltered(spark, path, t.embeddings, q,
+        k = 10, probes = 4, label = 3),
+      q => EmbeddingStore.searchIvfRadius(spark, path, q, minScore = 0.12,
+        probes = 4))
+    searches.foreach { f =>
+      val present = f(0L)
+      val gone = f(absent)
+      assert(gone.schema === present.schema)
+      assert(gone.collect().isEmpty)
+    }
+    assert(EmbeddingStore.searchIvf(spark, path, absent, k = 10).schema ===
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, cell INT, score DOUBLE"))
   }
 }

@@ -132,23 +132,21 @@ class ProductQuantizerSpec extends SparkTestBase {
     assert(math.abs(after - reported) < 1e-4, "refit over identical cells moved the measure")
   }
 
-  test("searchIvfPq returns the exact integer ADC ranking over the probed cells") {
-    val (path, _) = freshIndex()
-    val got = ProductQuantizer.searchIvfPq(spark, path, queryDocId = 0L, k = 10)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-
-    // independent ground truth, all in plain JVM arithmetic: read the
-    // stored codes + codebooks + query vector and re-rank
+  /** Independent ground truth for a top-10 `searchIvfPq(queryDocId)`
+    * over the probed cells of `got`, all in plain JVM arithmetic:
+    * read the stored codes + codebooks + query vector and re-rank. */
+  private def expectedAdc(path: String, queryDocId: Long,
+      got: Seq[(Long, Int, Long)]): Seq[(Long, Int, Long)] = {
     val probed = got.map(_._2).toSet
     val cb = graft.sources.IndexCatalog.read(spark, path, "pq_codebooks").collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Long](2))).toMap
     val qv = graft.sources.IndexCatalog.read(spark, path, "cells")
-      .filter(col("doc_id") === 0L).select(col("embedding")).first()
+      .filter(col("doc_id") === queryDocId).select(col("embedding")).first()
       .getSeq[Float](0).map(ProductQuantizer.quantizeLong)
-    val expected = graft.sources.IndexCatalog.read(spark, path, "pq_codes").collect()
+    graft.sources.IndexCatalog.read(spark, path, "pq_codes").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("cell"),
         r.getAs[scala.collection.Seq[Int]]("codes")))
-      .filter { case (id, cell, _) => id != 0L && probed(cell) }
+      .filter { case (id, cell, _) => id != queryDocId && probed(cell) }
       .map { case (id, cell, codes) =>
         val adist = codes.zipWithIndex.map { case (c, s) =>
           val cv = cb((s, c))
@@ -159,8 +157,35 @@ class ProductQuantizerSpec extends SparkTestBase {
         (id, cell, adist)
       }
       .sortBy { case (id, _, adist) => (adist, id) }
-      .take(10)
-    assert(got.toSeq === expected.toSeq)
+      .take(10).toSeq
+  }
+
+  private def pqTop10(path: String, queryDocId: Long) =
+    ProductQuantizer.searchIvfPq(spark, path, queryDocId, k = 10)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+
+  test("searchIvfPq returns the exact integer ADC ranking over the probed cells") {
+    val (path, _) = freshIndex()
+    val got = pqTop10(path, 0L)
+    assert(got === expectedAdc(path, 0L, got))
+  }
+
+  test("an index deleted and rebuilt at the same path is never served " +
+    "its predecessor's codebooks") {
+    val (path, vecs) = freshIndex()
+    def codebooks() = graft.sources.IndexCatalog.read(spark, path,
+        "pq_codebooks").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSet
+    val first = pqTop10(path, 0L)
+    assert(first === expectedAdc(path, 0L, first))
+    val cbBefore = codebooks()
+    graft.sources.LayoutStore.deleteRecursively(new java.io.File(path))
+    // different vectors under the same ids: the codebooks change
+    EmbeddingStore.buildIvfIndex(spark,
+      vecs.withColumn("embedding", reverse(col("embedding"))), path)
+    assert(codebooks() !== cbBefore, "fixture rot: the rebuild kept its codebooks")
+    val second = pqTop10(path, 0L)
+    assert(second === expectedAdc(path, 0L, second))
   }
 
   test("appendToIvfIndex keeps the code sidecar consistent with the cells") {

@@ -1077,4 +1077,77 @@ class TableFormatSpec extends SparkTestBase {
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
     assert(ins.intersect(del).isEmpty)
   }
+
+  // driver-cached manifests: a warm read plans without Spark, and the
+  // cache key (the manifest's part-file identity) can never serve a
+  // generation whose bytes changed under the same (root, gen)
+
+  private def ids(root: String, gen: Long): Seq[Long] =
+    TableFormat.readViaManifest(spark, root, gen,
+        TableFormat.genSchema(root, gen))
+      .collect().map(_.getLong(0)).sorted.toSeq
+
+  test("manifest cache: a warm readViaManifest and prunedFilesIn " +
+    "run zero Spark jobs") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mcache")
+      .toString
+    val docs = spark.range(0, 400)
+      .select(col("id").as("doc_id"), (col("id") % 7).as("cell"))
+      .repartition(4, col("cell"))
+    TableFormat.commitGenManifested(docs, root, 0L, Seq("cell", "doc_id"),
+      bloomKeys = Seq("doc_id"))
+    TableFormat.manifestCache.clear()
+    val (_, coldJobs) = withJobCount(TableFormat.prunedFilesIn(spark,
+      root, 0L, "doc_id", Seq(11L)))
+    assert(coldJobs > 0, "a cold manifest read must go through Spark")
+    val schema = TableFormat.genSchema(root, 0L)
+    val (files, warmPlan) = withJobCount(TableFormat.prunedFilesIn(spark,
+      root, 0L, "doc_id", Seq(11L)))
+    assert(warmPlan === 0, s"warm prunedFilesIn ran $warmPlan jobs")
+    assert(files.nonEmpty && files.length < 4)
+    val (_, warmRead) = withJobCount(
+      TableFormat.readViaManifest(spark, root, 0L, schema))
+    assert(warmRead === 0, s"warm readViaManifest ran $warmRead jobs")
+  }
+
+  test("manifest cache: re-committing the same generation id is " +
+    "seen, not served stale") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mrecommit")
+      .toString
+    TableFormat.commitGenManifested(spark.range(0, 10).toDF("doc_id"),
+      root, 0L, Seq("doc_id"))
+    assert(ids(root, 0L) === (0L until 10L))
+    // the single-writer verb overwrites gen_0 in place
+    TableFormat.commitGenManifested(spark.range(100, 103).toDF("doc_id"),
+      root, 0L, Seq("doc_id"))
+    assert(ids(root, 0L) === Seq(100L, 101L, 102L))
+    assert(TableFormat.manifestRowCount(spark, root, 0L) === 3L)
+  }
+
+  test("manifest cache: a table deleted and recreated at the same root " +
+    "is seen") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mrecreate")
+      .toString
+    TableFormat.commitGenManifested(spark.range(0, 10).toDF("doc_id"),
+      root, 0L, Seq("doc_id"))
+    assert(ids(root, 0L) === (0L until 10L))
+    graft.sources.LayoutStore.deleteRecursively(new java.io.File(root))
+    TableFormat.commitGenManifested(spark.range(50, 55).toDF("doc_id"),
+      root, 0L, Seq("doc_id"))
+    assert(ids(root, 0L) === (50L until 55L))
+  }
+
+  test("manifest cache: reading a vacuumed generation still fails " +
+    "loudly") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mvacuum")
+      .toString
+    (0L to 2L).foreach(g => TableFormat.commitGenManifested(
+      spark.range(g * 10, g * 10 + 5).toDF("doc_id"), root, g,
+      Seq("doc_id")))
+    // warm the cache for the generation the vacuum is about to reap
+    assert(ids(root, 0L) === (0L until 5L))
+    TableFormat.vacuumManifested(spark, root, keep = 1)
+    intercept[java.io.IOException](ids(root, 0L))
+    assert(ids(root, 2L) === (20L until 25L))
+  }
 }
